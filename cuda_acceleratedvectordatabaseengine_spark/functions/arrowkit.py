@@ -320,3 +320,63 @@ def topk_columns(
     flat_ids = ids[sel].ravel(order="F")
     flat_d = np.take_along_axis(dmat, sel, axis=0).ravel(order="F")
     return qcol, flat_ids, flat_d
+
+
+def topk_merge(
+    q: np.ndarray, ids: np.ndarray, d: np.ndarray, k: int, dedup: bool = True
+) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+    """T4 merge of flat (query, id, distance) candidate columns: per query,
+    dedup by id keeping the min distance (when ``dedup``), order by
+    (distance, id), take k (engine/ivf_flat_index.cpp:474-518).
+
+    Returns (query, rank, id, distance) sorted by (query, rank), ranks
+    1-based int32 — the rows the Spark window merge emits."""
+    if dedup and len(q):
+        o = np.lexsort((d, ids, q))
+        q, ids, d = q[o], ids[o], d[o]
+        first = np.ones(len(q), dtype=bool)
+        first[1:] = (q[1:] != q[:-1]) | (ids[1:] != ids[:-1])
+        q, ids, d = q[first], ids[first], d[first]
+    o = np.lexsort((ids, d, q))
+    q, ids, d = q[o], ids[o], d[o]
+    starts = np.ones(len(q), dtype=bool)
+    starts[1:] = q[1:] != q[:-1]
+    group_start = np.maximum.accumulate(np.where(starts, np.arange(len(q)), 0))
+    rank = np.arange(len(q)) - group_start + 1
+    keep = rank <= k
+    return q[keep], rank[keep].astype(np.int32), ids[keep], d[keep]
+
+
+class TaskTopK:
+    """A scan task's running top-k per query: scanners ``add`` each
+    batch's candidates and emit one merged batch at the end of the task,
+    so a task contributes at most nq * k candidate rows to the search's
+    final merge. Keeping the task's own T4 top-k (dedup by id, then
+    (distance, id) order) loses nothing: a candidate outside it has k
+    distinct ids ahead of it in this task alone."""
+
+    def __init__(self, k: int, dedup: bool = True):
+        self.k, self.dedup = k, dedup
+        self.parts: list = []
+        self.rows = 0
+        self.limit = 1 << 16  # buffered rows before an in-task merge
+
+    def add(self, q: np.ndarray, ids: np.ndarray, d: np.ndarray) -> None:
+        self.parts.append((q, ids, d))
+        self.rows += len(q)
+        if self.rows > self.limit:
+            self._merge()
+            self.limit = max(self.limit, 2 * self.rows)
+
+    def _merge(self) -> None:
+        q, ids, d = (np.concatenate(c) for c in zip(*self.parts))
+        q, _rank, ids, d = topk_merge(q, ids, d, self.k, self.dedup)
+        self.parts, self.rows = [(q, ids, d)], len(q)
+
+    def batches(self):
+        """The task's merged candidates as {query_id, id, distance}."""
+        if not self.rows:
+            return
+        self._merge()
+        q, ids, d = self.parts[0]
+        yield batch(query_id=q, id=ids, distance=d)

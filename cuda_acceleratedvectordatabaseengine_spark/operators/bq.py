@@ -41,7 +41,12 @@ from pyspark.sql import functions as F
 from ..functions import distance as D
 from ..sources.epochs import EpochManager, Manifest, prune_lists
 from . import knn
-from .ivf import IVFIndex, resolve_nprobe, select_nprobe_lists
+from .ivf import (
+    IVFIndex,
+    check_query_matrix,
+    resolve_nprobe,
+    select_nprobe_lists,
+)
 
 # popcount lookup for uint8 — np.bitwise_count needs numpy>=2; the LUT is
 # version-proof and the gather is a single vectorized index.
@@ -326,16 +331,29 @@ class IVFBQIndex:
         rerank_k candidates exactly against raw vectors. ``metric`` applies
         to the coarse probe and the exact rerank (default: index metric) —
         the fine scan is always Hamming over the sign bits."""
+        qids, Q = knn.collect_query_matrix(queries, query_id_col, qvec_col)
+        return self.search_matrix(
+            qids, Q, k, nprobe=nprobe, metric=metric,
+            rerank_exact=rerank_exact, rerank_k=rerank_k, where=where,
+        )
+
+    def search_matrix(
+        self,
+        qids: np.ndarray,
+        Q: np.ndarray,
+        k: int,
+        nprobe: "int | None" = None,
+        metric: str | None = None,
+        rerank_exact: bool = False,
+        rerank_k: int | None = None,
+        where: "str | None" = None,
+    ) -> DataFrame:
+        """``search`` on an already-collected query matrix — the search
+        core (see ``IVFIndex.search_matrix``)."""
         knn.validate_topk(k)
         nprobe = resolve_nprobe(self.manifest, nprobe, self.surface)
         metric = D.parse_metric(metric or self.metric)
-        qids, Q = knn.collect_query_matrix(queries, query_id_col, qvec_col)
-        if len(qids) == 0:
-            raise ValueError("empty query batch")
-        if Q.shape[1] != self.dimension:
-            raise ValueError(
-                f"query dimension {Q.shape[1]} != index dimension {self.dimension}"
-            )
+        qids, Q = check_query_matrix(qids, Q, self.dimension)
         probe = select_nprobe_lists(self.centroids, Q, nprobe, metric)
         Qb = encode_batch_bq(Q, self.thresholds)
         fetch_k = max(k, rerank_k or 0) if rerank_exact else k
@@ -351,6 +369,7 @@ class IVFBQIndex:
         def scan(batches):
             from ..functions import arrowkit as AK
 
+            acc = AK.TaskTopK(fetch_k)
             for rb in batches:
                 if rb.num_rows == 0:
                     continue
@@ -365,9 +384,8 @@ class IVFBQIndex:
                     ids = all_ids[mask]
                     dmat = hamming_matrix(all_codes[mask], Qb[qidx])
                     qcol, flat_ids, flat_d = AK.topk_columns(dmat, ids, fetch_k)
-                    yield AK.batch(
-                        query_id=qids[qidx][qcol], id=flat_ids, distance=flat_d
-                    )
+                    acc.add(qids[qidx][qcol], flat_ids, flat_d)
+            yield from acc.batches()
 
         needed = sorted(by_list)
         pruned = prune_lists(self.codes, needed, self.lists_per_bucket)
@@ -377,8 +395,8 @@ class IVFBQIndex:
             scan, schema=knn.CANDIDATE_SCHEMA
         )
         if not rerank_exact:
-            return knn.topk_per_query(cand, k, dedup=True)
-        shortlist = knn.topk_per_query(cand, fetch_k, dedup=True).select(
+            return knn.merge_topk(cand, k, len(qids))
+        shortlist = knn.merge_topk(cand, fetch_k, len(qids)).select(
             "query_id", "id"
         )
         vectors = prune_lists(self.vectors, needed, self.lists_per_bucket)

@@ -399,6 +399,21 @@ class SearchRequest:
         )
 
 
+def check_query_matrix(
+    qids: np.ndarray, Q: np.ndarray, dimension: int
+) -> tuple[np.ndarray, np.ndarray]:
+    """Validate a search's query matrix -> (int64 ids, float64 (nq, d))."""
+    qids = np.asarray(qids, dtype=np.int64)
+    if len(qids) == 0:
+        raise ValueError("empty query batch")  # server/query_service.cpp:71-75
+    Q = np.asarray(Q, dtype=np.float64)
+    if Q.shape[1] != dimension:
+        raise ValueError(
+            f"query dimension {Q.shape[1]} != index dimension {dimension}"
+        )  # server/query_service.cpp:115-119
+    return qids, Q
+
+
 def select_nprobe_lists(C: np.ndarray, Q: np.ndarray, nprobe: int, metric: str) -> np.ndarray:
     """T2 coarse probe: per query, the nprobe nearest list ids, ties to the
     smaller list_id (ivf_flat_index.cpp:298-336). Returns (nq, nprobe)."""
@@ -492,7 +507,8 @@ def _list_scanner(
     """mapInArrow over the pruned {id, vector, list_id} scan: score each
     inverted list in the batch against exactly the queries that probed it
     — zero-copy matrix views, batched per-query top-k (no Python loops
-    over rows or queries).
+    over rows or queries) folded into one running top-k per query per
+    task (``arrowkit.TaskTopK``), emitted when the task ends.
 
     Query-locality fusion (cost-gated, default effectively work-neutral
     — see ``FUSE_INFLATION_CAP`` for the measured rationale): when a
@@ -523,6 +539,7 @@ def _list_scanner(
 
     def scan(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         ws = D.task_workspace() if use_ws else None  # process-pooled (r14)
+        acc = AK.TaskTopK(k)
         for rb in batches:
             if rb.num_rows == 0:
                 continue
@@ -563,9 +580,7 @@ def _list_scanner(
                 keep = np.isfinite(flat_d)
                 if not keep.all():
                     qcol, flat_ids, flat_d = qcol[keep], flat_ids[keep], flat_d[keep]
-                yield AK.batch(
-                    query_id=qids[q_union[qcol]], id=flat_ids, distance=flat_d
-                )
+                acc.add(qids[q_union[qcol]], flat_ids, flat_d)
                 continue
             for i in pidx:
                 qidx = qsets[i]
@@ -573,9 +588,8 @@ def _list_scanner(
                 sub_ids, sub_V = ids[mask], V[mask]
                 dmat = D.pairwise(metric, sub_V, Q[qidx], ws=ws)  # (n, nq_sub)
                 qcol, flat_ids, flat_d = AK.topk_columns(dmat, sub_ids, k)
-                yield AK.batch(
-                    query_id=qids[qidx][qcol], id=flat_ids, distance=flat_d
-                )
+                acc.add(qids[qidx][qcol], flat_ids, flat_d)
+        yield from acc.batches()
 
     return scan
 
@@ -1023,7 +1037,13 @@ class IVFIndex:
         where: "str | Column | None" = None,
         cascade: str = "auto",
     ) -> DataFrame:
-        """Batched IVF search -> {query_id, rank, id, distance}.
+        """Batched IVF search -> {query_id, rank, id, distance}: collects
+        the query side (``knn.collect_query_matrix``) and runs
+        ``search_matrix`` on it, so the scan runs at call time whenever
+        the size rule merges on the driver (``knn.merge_topk``: at most
+        scan partitions x nq x k candidate rows within
+        ``knn.DRIVER_MERGE_MAX_ROWS``) and the result is a local relation.
+        Above that budget the merge is the lazy one-exchange shuffle.
 
         ``rerank_exact``/``rerank_k`` (proto/vdb.proto:22 — declared for any
         index type): keep the top ``rerank_k`` candidates from the probed
@@ -1053,17 +1073,33 @@ class IVFIndex:
         (warm page-cached storage refutes the cascade at every probe
         shape; r8/r10/r11 interleaved A/Bs). ``CASCADE_AUTO_DEFAULT``
         remains the regime-less global override."""
+        qids, Q = knn.collect_query_matrix(queries, query_id_col, qvec_col)
+        return self.search_matrix(
+            qids, Q, k, nprobe=nprobe, metric=metric,
+            rerank_exact=rerank_exact, rerank_k=rerank_k, where=where,
+            cascade=cascade,
+        )
+
+    def search_matrix(
+        self,
+        qids: np.ndarray,
+        Q: np.ndarray,
+        k: int,
+        nprobe: "int | None" = None,
+        metric: str | None = None,
+        rerank_exact: bool = False,
+        rerank_k: int | None = None,
+        where: "str | Column | None" = None,
+        cascade: str = "auto",
+    ) -> DataFrame:
+        """The search core: ``search`` on an already-collected query
+        matrix (``qids`` int64 (nq,), ``Q`` (nq, d)) — the serving and
+        batch paths call it directly, so a query batch is collected once.
+        Parameters and result as ``search``."""
         knn.validate_topk(k)
         nprobe = self.resolved_nprobe(nprobe)
         metric = D.parse_metric(metric or self.manifest.metric)
-        qids, Q = knn.collect_query_matrix(queries, query_id_col, qvec_col)
-        if len(qids) == 0:
-            raise ValueError("empty query batch")  # server/query_service.cpp:71-75
-        if Q.shape[1] != self.manifest.dimension:
-            raise ValueError(
-                f"query dimension {Q.shape[1]} != index dimension "
-                f"{self.manifest.dimension}"
-            )  # server/query_service.cpp:115-119
+        qids, Q = check_query_matrix(qids, Q, self.manifest.dimension)
         if cascade not in ("auto", "off", "sq"):
             raise ValueError(
                 f"cascade must be 'auto', 'off', or 'sq', got {cascade!r}"
@@ -1081,15 +1117,14 @@ class IVFIndex:
             if sq_handle is not None:
                 rk = max(rerank_k or 0, CASCADE_RERANK_MULT * k,
                          CASCADE_RERANK_MIN)
-                return sq_handle.search(
-                    queries,
+                return sq_handle.search_matrix(
+                    qids,
+                    Q,
                     k,
                     nprobe=nprobe,
                     metric=metric,
                     rerank_exact=True,
                     rerank_k=rk,
-                    query_id_col=query_id_col,
-                    qvec_col=qvec_col,
                     where=where,
                 )
         fetch_k = max(k, rerank_k or 0) if rerank_exact else k
@@ -1103,10 +1138,8 @@ class IVFIndex:
         # dedup-by-id merge (T4): ids are unique per list, but the reference
         # dedups on merge regardless (ivf_flat_index.cpp:493-504)
         if not rerank_exact:
-            return knn.topk_per_query(cand, k, dedup=True)
-        shortlist = knn.topk_per_query(cand, fetch_k, dedup=True).select(
-            "query_id", "id"
-        )
+            return knn.merge_topk(cand, k, len(qids))
+        shortlist = knn.merge_topk(cand, fetch_k, len(qids)).select("query_id", "id")
         # rerank source = the SAME pruned scan: every shortlist candidate
         # lives in a probed list by construction, so joining back against
         # the full chain would read nlist/nprobe x more partitions for
@@ -1553,7 +1586,7 @@ def run_search_batch(
     """Batch of heterogeneous requests (engine/ivf_flat_index.h:55 —
     declared, never implemented in the reference): each request carries its
     OWN (k, nprobe, metric, rerank) params. Works over any index exposing
-    ``.spark`` and ``.search`` (IVF-Flat and IVF-PQ).
+    ``.spark`` and ``.search_matrix`` (IVF-Flat, SQ, BQ and PQ).
 
     Requests with identical params fuse into one set-at-a-time search (the
     same coalescing the reference's request queue performs per index+params
@@ -1617,13 +1650,14 @@ def run_search_batch(
             PriorityRequestQueue.set_pool(index.spark, max(r.priority for r in reqs))
         try:
             p = reqs[0]
-            qdf = index.spark.createDataFrame(
-                [(r.query_id, r.qvec) for r in reqs],
-                "query_id long, qvec array<float>",
-            )
+            # the requests ARE the group's query matrix; qvec is float32
+            # storage like every array<float> query column
+            qids = np.array([r.query_id for r in reqs], dtype=np.int64)
+            Q = np.array([r.qvec for r in reqs], dtype=np.float32)
             t0 = _time.perf_counter()
-            res = index.search(
-                qdf,
+            res = index.search_matrix(
+                qids,
+                Q.astype(np.float64),
                 k=p.k,
                 nprobe=p.nprobe,
                 metric=p.metric,

@@ -24,23 +24,35 @@ Two physical strategies, one logical semantics:
 
 ``impl="numpy"`` (default) — the scale path. Queries are collected (they are
   the small side by contract — a search batch, not a table) and closed over
-  by an Arrow ``mapInPandas`` that computes a float64 distance block per
-  Arrow batch and keeps only the per-batch top-k per query. Only
-  O(partitions * nq * k) candidate rows ever shuffle — the global top-k
-  window then runs on a tiny relation. This is the partial/final top-k
-  pattern (map-side combine for ORDER BY+LIMIT), and the numpy block product
-  is the moral equivalent of the reference's CUDA bruteforce kernel
-  (engine/kernels.cuh:84-185) — one dense scan per partition, zero
-  cross-partition traffic until the k-row merge.
+  by an Arrow ``mapInArrow`` scan that computes a float64 distance block per
+  Arrow batch and keeps one running top-k per query per task
+  (``arrowkit.TaskTopK``), so a task emits at most nq * k candidate rows.
+  This is the partial/final top-k pattern (map-side combine for ORDER
+  BY+LIMIT), and the numpy block product is the moral equivalent of the
+  reference's CUDA bruteforce kernel (engine/kernels.cuh:84-185) — one dense
+  scan per partition, zero cross-partition traffic until the k-row merge.
+
+The final T4 merge of every search whose queries are a collected matrix
+(this module's numpy k-NN and ``exact_rerank``, the IVF/SQ/BQ/PQ searches
+and their rerank shortlists) goes through ``merge_topk``. A size rule picks
+the physical merge before the scan runs: candidate rows are at most
+scan partitions * nq * k, and when that bound fits ``DRIVER_MERGE_MAX_ROWS``
+the scan's candidates are collected as Arrow and merged in numpy on the
+driver (``arrowkit.topk_merge``) — one Spark job, no shuffle, and the result
+is a local relation. Above the budget the one-exchange shuffle merge
+(``topk_per_query``) runs instead. Both return the same rows.
 """
 
 from __future__ import annotations
 
+import threading
 from collections.abc import Iterator
+from contextlib import contextmanager
 
 import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..functions import distance as D
 
@@ -49,7 +61,22 @@ MAX_TOPK = 1000  # server/query_service.cpp:77
 # batches of <=64 (server/query_service.h:25-31) — we allow far larger but
 # enforce the contract instead of leaving it docstring-only.
 MAX_QUERY_BATCH = 1_000_000
+# Candidate rows a search may merge on the driver (module docstring): the
+# bound scan partitions * nq * k is checked against this before the scan
+# runs. 1M rows is 24 MB of Arrow candidates and keeps the merged result
+# under Spark's 48 MB local-relation threshold. A scale rule, like
+# MAX_QUERY_BATCH, not a user option.
+DRIVER_MERGE_MAX_ROWS = 1_000_000
 CANDIDATE_SCHEMA = "query_id long, id long, distance double"
+# the shuffle merge's output schema (rank is a non-null row_number)
+RESULTS_SCHEMA = T.StructType(
+    [
+        T.StructField("query_id", T.LongType()),
+        T.StructField("rank", T.IntegerType(), False),
+        T.StructField("id", T.LongType()),
+        T.StructField("distance", T.DoubleType()),
+    ]
+)
 # reuse pairwise score workspaces across Arrow batches in the brute-force
 # scanners (bit-identical values; the r10 interleaved A/B artifact is
 # scripts/ab_knn_ws.py). Resolved at scanner-FACTORY time so flipping the
@@ -62,22 +89,14 @@ def validate_topk(k: int) -> None:
         raise ValueError(f"topk must be in [1, {MAX_TOPK}], got {k}")
 
 
-# One-exchange T4 merge (r14): hash-partitioning on query_id alone satisfies
-# the clustering requirement of BOTH merge steps (dedup groups by
-# (query_id, id) — a superset of the partitioning key — and the rank window
-# groups by query_id), so an explicit repartition(query_id) lets the
-# min-aggregate dedup AND the top-k window share ONE shuffle. The r13 shape
-# was two back-to-back window stages: Exchange(query_id, id) + sort-based
-# row_number dedup, then Exchange(query_id) + the rank window — 2 exchanges
-# and 4 sorts per search merge. min(distance) per (query_id, id) is exactly
-# the row kept by the old row_number()=1-by-distance-asc dedup (distances
-# are finite by construction — masked +inf candidates are filtered in the
-# scanners), so results are identical. NULL divergence (r14 ADVICE): if a
-# scanner ever emitted a NULL distance, min() would ignore it while the old
-# nulls-first asc window kept it — today's scanners guarantee finite
-# non-null values, so the shapes agree; any new scanner must keep that
-# contract. False = the r13 two-window shape, kept for A/B.
-TOPK_SINGLE_EXCHANGE = True
+# The shuffle merge (above the driver budget) is one exchange: hash-
+# partitioning on query_id alone satisfies the clustering requirement of
+# BOTH merge steps (the dedup groups by (query_id, id), a superset of the
+# partitioning key, and the rank window groups by query_id), so an explicit
+# repartition(query_id) lets the min-aggregate dedup AND the top-k window
+# share ONE shuffle. min(distance) per (query_id, id) ignores NULLs, so
+# every scanner must emit finite non-null distances (masked +inf
+# candidates are filtered in the scanners).
 
 
 def topk_per_query(
@@ -95,21 +114,11 @@ def topk_per_query(
     results are deterministic across engines and runs.
     """
     if dedup:
-        if TOPK_SINGLE_EXCHANGE:
-            candidates = (
-                candidates.repartition(query_id_col)
-                .groupBy(query_id_col, id_col)
-                .agg(F.min(distance_col).alias(distance_col))
-            )
-        else:
-            dd = Window.partitionBy(query_id_col, id_col).orderBy(
-                F.col(distance_col).asc()
-            )
-            candidates = (
-                candidates.withColumn("__dd", F.row_number().over(dd))
-                .filter(F.col("__dd") == 1)
-                .drop("__dd")
-            )
+        candidates = (
+            candidates.repartition(query_id_col)
+            .groupBy(query_id_col, id_col)
+            .agg(F.min(distance_col).alias(distance_col))
+        )
     w = Window.partitionBy(query_id_col).orderBy(
         F.col(distance_col).asc(), F.col(id_col).asc()
     )
@@ -123,6 +132,102 @@ def topk_per_query(
             F.col(distance_col).alias("distance"),
         )
     )
+
+
+_capture = threading.local()
+
+
+@contextmanager
+def capture_scans():
+    """Record the candidate DataFrames that searches on this thread merge:
+    the scans a search actually runs, for plan inspection. A driver-merged
+    search returns a local relation whose own plan holds no scan.
+
+        with knn.capture_scans() as scans:
+            index.search(queries, k=10)
+        scans[0].explain()
+    """
+    prev = getattr(_capture, "scans", None)
+    _capture.scans = scans = []
+    try:
+        yield scans
+    finally:
+        _capture.scans = prev
+
+
+def _note_scan(cand: DataFrame) -> None:
+    scans = getattr(_capture, "scans", None)
+    if scans is not None:
+        scans.append(cand)
+
+
+def _scan_partitions(df: DataFrame) -> "int | None":
+    """Partitions of ``df``'s physical plan when it has no exchange or
+    subquery, so counting them plans the scan but runs no job; None
+    otherwise (an adaptive plan only knows its partitions once its
+    stages have run)."""
+    plan = df._jdf.queryExecution().executedPlan()
+    tree = plan.toString()
+    if any(s in tree for s in ("AdaptiveSparkPlan", "Exchange", "Subquery")):
+        return None
+    return int(plan.execute().getNumPartitions())
+
+
+def _driver_merge_fits(scan: DataFrame, nq: int, k: int) -> bool:
+    """The size rule: a scan whose tasks each emit at most nq * k
+    candidates (one running top-k per query per task) merges on the
+    driver when partitions * nq * k fits ``DRIVER_MERGE_MAX_ROWS``."""
+    if nq * k > DRIVER_MERGE_MAX_ROWS:
+        return False
+    parts = _scan_partitions(scan)
+    return parts is not None and parts * nq * k <= DRIVER_MERGE_MAX_ROWS
+
+
+def _driver_topk(cand: DataFrame, k: int, dedup: bool):
+    from ..functions import arrowkit as AK
+
+    tbl = cand.toArrow()
+    return AK.topk_merge(
+        tbl.column("query_id").to_numpy(),
+        tbl.column("id").to_numpy(),
+        tbl.column("distance").to_numpy(),
+        k,
+        dedup,
+    )
+
+
+def _results_frame(spark, q, rank, ids, d) -> DataFrame:
+    """RESULTS-shaped local relation from driver-side merge columns."""
+    import pyarrow as pa
+
+    tbl = pa.table(
+        {
+            "query_id": pa.array(q, pa.int64()),
+            "rank": pa.array(rank, pa.int32()),
+            "id": pa.array(ids, pa.int64()),
+            "distance": pa.array(d, pa.float64()),
+        }
+    )
+    return spark.createDataFrame(tbl, RESULTS_SCHEMA)
+
+
+def merge_topk(
+    cand: DataFrame,
+    k: int,
+    nq: int,
+    dedup: bool = True,
+    source: "DataFrame | None" = None,
+) -> DataFrame:
+    """The final T4 merge of a search's candidates -> {query_id, rank, id,
+    distance}: on the driver when the size rule admits it (the scan runs
+    now), else the lazy one-exchange shuffle merge. ``k`` must be the
+    per-task top-k the scanner kept; ``source`` is the scan whose
+    partitions ``cand`` keeps when ``cand`` itself plans an exchange (the
+    streamed side of a broadcast join)."""
+    _note_scan(cand)
+    if not _driver_merge_fits(cand if source is None else source, nq, k):
+        return topk_per_query(cand, k, dedup=dedup)
+    return _results_frame(cand.sparkSession, *_driver_topk(cand, k, dedup))
 
 
 def exact_knn(
@@ -208,7 +313,9 @@ def exact_rerank(
 
     The shortlist is O(nq * rerank_k) rows — broadcast it against the raw
     vectors so the corpus-side join is shuffle-free. Query ids map to rows
-    positionally via searchsorted (O(nq) memory for any id distribution)."""
+    positionally via searchsorted (O(nq) memory for any id distribution).
+    The broadcast join keeps the vector scan's partitions, so the size
+    rule of ``merge_topk`` counts those."""
     joined = vectors.join(F.broadcast(shortlist.select("query_id", id_col)), id_col)
     sort_idx = np.argsort(qids)
     sorted_qids = qids[sort_idx]
@@ -216,22 +323,24 @@ def exact_rerank(
     def rescore(batches):
         from ..functions import arrowkit as AK
 
+        acc = AK.TaskTopK(k)
         for rb in batches:
             if rb.num_rows == 0:
                 continue
             V = AK.list_matrix(rb, vec_col)
             row_qids = AK.column(rb, "query_id", np.int64)
             qrows = sort_idx[np.searchsorted(sorted_qids, row_qids)]
-            yield AK.batch(
-                query_id=row_qids,
-                id=AK.column(rb, id_col, np.int64),
-                distance=D.rowwise(metric, V, Q[qrows]),
+            acc.add(
+                row_qids,
+                AK.column(rb, id_col, np.int64),
+                D.rowwise(metric, V, Q[qrows]),
             )
+        yield from acc.batches()
 
     rescored = joined.select("query_id", id_col, vec_col).mapInArrow(
         rescore, schema=CANDIDATE_SCHEMA
     )
-    return topk_per_query(rescored, k, dedup=True)
+    return merge_topk(rescored, k, len(qids), dedup=True, source=vectors)
 
 
 def partial_topk_scanner(
@@ -244,8 +353,9 @@ def partial_topk_scanner(
 ):
     """Build a mapInArrow function: per Arrow batch, zero-copy matrix view +
     dense distance block + batched per-query top-k (np.argpartition ≈
-    std::partial_sort, ivf_flat_index.cpp:367-371). No pandas, no per-row
-    Python objects, no per-query loop."""
+    std::partial_sort, ivf_flat_index.cpp:367-371), folded into the task's
+    running top-k. No dedup: exact k-NN scores each corpus row once. No
+    pandas, no per-row Python objects, no per-query loop."""
     import pyarrow as pa
 
     from ..functions import arrowkit as AK
@@ -254,6 +364,7 @@ def partial_topk_scanner(
 
     def scan(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         ws = D.task_workspace() if use_ws else None  # process-pooled (r14)
+        acc = AK.TaskTopK(k, dedup=False)
         for rb in batches:
             if rb.num_rows == 0:
                 continue
@@ -261,9 +372,8 @@ def partial_topk_scanner(
             V = AK.list_matrix(rb, vec_col)
             dmat = D.pairwise(metric, V, Q, ws=ws)  # (n, nq)
             qcol, flat_ids, flat_d = AK.topk_columns(dmat, ids, k)
-            yield AK.batch(
-                query_id=qids[qcol], id=flat_ids, distance=flat_d
-            )
+            acc.add(qids[qcol], flat_ids, flat_d)
+        yield from acc.batches()
 
     return scan
 
@@ -346,7 +456,7 @@ def _exact_knn_numpy(vectors, queries, k, metric, id_col, vec_col, query_id_col,
         raise ValueError("empty query batch")  # server/query_service.cpp:71-75
     scan = partial_topk_scanner(qids, Q, k, metric, id_col, vec_col)
     cand = vectors.select(id_col, vec_col).mapInArrow(scan, schema=CANDIDATE_SCHEMA)
-    return topk_per_query(cand, k, dedup=False)
+    return merge_topk(cand, k, len(qids), dedup=False)
 
 
 def grouped_knn(

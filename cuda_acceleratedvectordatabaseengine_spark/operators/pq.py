@@ -45,7 +45,12 @@ from ..functions import distance as D
 from ..sources.epochs import EpochManager, Manifest, prune_lists
 from .kmeans import TRAIN_SAMPLE_LIMIT, _kmeans_pp_init
 from . import knn
-from .ivf import IVFIndex, resolve_nprobe, select_nprobe_lists
+from .ivf import (
+    IVFIndex,
+    check_query_matrix,
+    resolve_nprobe,
+    select_nprobe_lists,
+)
 
 ADC_METRICS = (D.L2, D.INNER_PRODUCT)
 
@@ -762,16 +767,29 @@ class IVFPQIndex:
         ``where``: filtered search — a predicate over the index columns
         (``id``, ``list_id``) applied inside BOTH the pruned code scan and
         the rerank join-back (see ``IVFIndex.search``)."""
+        qids, Q = knn.collect_query_matrix(queries, query_id_col, qvec_col)
+        return self.search_matrix(
+            qids, Q, k, nprobe=nprobe, metric=metric,
+            rerank_exact=rerank_exact, rerank_k=rerank_k, where=where,
+        )
+
+    def search_matrix(
+        self,
+        qids: np.ndarray,
+        Q: np.ndarray,
+        k: int,
+        nprobe: "int | None" = None,
+        metric: str | None = None,
+        rerank_exact: bool = False,
+        rerank_k: int | None = None,
+        where: "str | None" = None,
+    ) -> DataFrame:
+        """``search`` on an already-collected query matrix — the search
+        core (see ``IVFIndex.search_matrix``)."""
         knn.validate_topk(k)
         nprobe = resolve_nprobe(self.manifest, nprobe, self.surface)
         metric = D.parse_metric(metric or self.metric)
-        qids, Q = knn.collect_query_matrix(queries, query_id_col, qvec_col)
-        if len(qids) == 0:
-            raise ValueError("empty query batch")
-        if Q.shape[1] != self.dimension:
-            raise ValueError(
-                f"query dimension {Q.shape[1]} != index dimension {self.dimension}"
-            )
+        qids, Q = check_query_matrix(qids, Q, self.dimension)
         probe = select_nprobe_lists(self.centroids, Q, nprobe, metric)
         # OPQ-lite: the codes live in rotated space — rotate the queries
         # into it for the ADC tables. Rotation is orthonormal, so the ADC
@@ -816,6 +834,7 @@ class IVFPQIndex:
             from ..functions.distance import _ws_block
 
             ws: dict = D.task_workspace()  # process-pooled workspace (r14)
+            acc = AK.TaskTopK(fetch_k)
             for rb in batches:
                 if rb.num_rows == 0:
                     continue
@@ -856,9 +875,8 @@ class IVFPQIndex:
                     if residual and metric != D.L2:
                         dmat += const
                     qcol, flat_ids, flat_d = AK.topk_columns(dmat, ids, fetch_k)
-                    yield AK.batch(
-                        query_id=qids[qidx][qcol], id=flat_ids, distance=flat_d
-                    )
+                    acc.add(qids[qidx][qcol], flat_ids, flat_d)
+            yield from acc.batches()
 
         needed = sorted({int(x) for x in probe.ravel()})
         pruned = prune_lists(self.codes, needed, self.lists_per_bucket)
@@ -868,8 +886,8 @@ class IVFPQIndex:
             scan, schema=knn.CANDIDATE_SCHEMA
         )
         if not rerank_exact:
-            return knn.topk_per_query(cand, k, dedup=True)
-        shortlist = knn.topk_per_query(cand, fetch_k, dedup=True).select(
+            return knn.merge_topk(cand, k, len(qids))
+        shortlist = knn.merge_topk(cand, fetch_k, len(qids)).select(
             "query_id", "id"
         )
         return self.rerank(shortlist, qids, Q, k, metric, lists=needed, where=where)

@@ -42,7 +42,12 @@ from pyspark.sql import functions as F
 from ..functions import distance as D
 from ..sources.epochs import EpochManager, Manifest, prune_lists
 from . import knn
-from .ivf import IVFIndex, resolve_nprobe, select_nprobe_lists
+from .ivf import (
+    IVFIndex,
+    check_query_matrix,
+    resolve_nprobe,
+    select_nprobe_lists,
+)
 
 
 def train_sq(df: DataFrame, vec_col: str = "vector") -> tuple[np.ndarray, np.ndarray]:
@@ -335,16 +340,29 @@ class IVFSQIndex:
         """Probe lists, scan their SQ codes (decode per Arrow batch -> dense
         float block -> shared BLAS kernel), merge top-k; optionally re-score
         the top rerank_k candidates exactly against the raw vectors."""
+        qids, Q = knn.collect_query_matrix(queries, query_id_col, qvec_col)
+        return self.search_matrix(
+            qids, Q, k, nprobe=nprobe, metric=metric,
+            rerank_exact=rerank_exact, rerank_k=rerank_k, where=where,
+        )
+
+    def search_matrix(
+        self,
+        qids: np.ndarray,
+        Q: np.ndarray,
+        k: int,
+        nprobe: "int | None" = None,
+        metric: str | None = None,
+        rerank_exact: bool = False,
+        rerank_k: int | None = None,
+        where: "str | None" = None,
+    ) -> DataFrame:
+        """``search`` on an already-collected query matrix — the search
+        core (see ``IVFIndex.search_matrix``)."""
         knn.validate_topk(k)
         nprobe = resolve_nprobe(self.manifest, nprobe, self.surface)
         metric = D.parse_metric(metric or self.metric)
-        qids, Q = knn.collect_query_matrix(queries, query_id_col, qvec_col)
-        if len(qids) == 0:
-            raise ValueError("empty query batch")
-        if Q.shape[1] != self.dimension:
-            raise ValueError(
-                f"query dimension {Q.shape[1]} != index dimension {self.dimension}"
-            )
+        qids, Q = check_query_matrix(qids, Q, self.dimension)
         probe = select_nprobe_lists(self.centroids, Q, nprobe, metric)
         fetch_k = max(k, rerank_k or 0) if rerank_exact else k
         by_list: dict[int, np.ndarray] = {}
@@ -360,6 +378,7 @@ class IVFSQIndex:
             from ..functions import arrowkit as AK
 
             ws: dict = D.task_workspace()  # process-pooled workspace (r14)
+            acc = AK.TaskTopK(fetch_k)
             for rb in batches:
                 if rb.num_rows == 0:
                     continue
@@ -375,9 +394,8 @@ class IVFSQIndex:
                     V = decode_batch_sq(all_codes[mask], vmin, vmax)
                     dmat = D.pairwise(metric, V, Q[qidx], ws=ws)
                     qcol, flat_ids, flat_d = AK.topk_columns(dmat, ids, fetch_k)
-                    yield AK.batch(
-                        query_id=qids[qidx][qcol], id=flat_ids, distance=flat_d
-                    )
+                    acc.add(qids[qidx][qcol], flat_ids, flat_d)
+            yield from acc.batches()
 
         needed = sorted(by_list)
         pruned = prune_lists(self.codes, needed, self.lists_per_bucket)
@@ -387,8 +405,8 @@ class IVFSQIndex:
             scan, schema=knn.CANDIDATE_SCHEMA
         )
         if not rerank_exact:
-            return knn.topk_per_query(cand, k, dedup=True)
-        shortlist = knn.topk_per_query(cand, fetch_k, dedup=True).select(
+            return knn.merge_topk(cand, k, len(qids))
+        shortlist = knn.merge_topk(cand, fetch_k, len(qids)).select(
             "query_id", "id"
         )
         vectors = prune_lists(self.vectors, needed, self.lists_per_bucket)

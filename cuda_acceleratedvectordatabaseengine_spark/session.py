@@ -17,13 +17,13 @@ from pyspark.sql import SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
 
-def get_spark(
-    app_name: str = "cavde-spark",
+def session_conf(
     cpus: int | str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
-) -> SparkSession:
-    """Build (or reuse) a SparkSession.
+) -> dict[str, str]:
+    """The options ``get_spark`` starts its session with, composed from the
+    environment and the caller's ``extra_conf`` (which wins on any key).
 
     ``spark.sql.shuffle.partitions`` defaults to the core count rather than
     Spark's 200: at 100 TB the real setting comes from AQE advisory sizes,
@@ -33,23 +33,11 @@ def get_spark(
     shuffle = shuffle_partitions or int(
         os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", DEFAULT_SHUFFLE_PARTITIONS)
     )
-    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g")
-    # Pre-fault the whole heap at JVM start (-Xms = -Xmx + AlwaysPreTouch):
-    # standard practice for dedicated Spark drivers/executors (fixed-size
-    # heap, no uncommit/recommit churn). On this host it is load-bearing:
-    # fresh anonymous pages fault at ~0.1-0.35 GB/s (measured first-touch
-    # probes, OPTIMIZATION_r14.md), so a lazily-grown heap pays that cost
-    # INSIDE timed queries; pre-touching moves it to startup. Interleaved
-    # A/B on the bench IVF workload: add_time 10.65s -> 5.84s min-of-reps
-    # (scripts/ab_pretouch.py). On a normally-fast host the pretouch is
-    # <2s of startup. Opt out with SPARK_GRAFT_PRETOUCH=0.
-    pretouch = os.environ.get("SPARK_GRAFT_PRETOUCH", "1") != "0"
-    builder = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
+    conf = {
+        "spark.master": f"local[{cpus}]",
+        "spark.sql.shuffle.partitions": str(shuffle),
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
         # Respect advisoryPartitionSizeInBytes when coalescing instead of
         # targeting the core count (the Spark docs' own recommendation for
         # this flag). parallelismFirst=true kept every small shuffle at
@@ -60,32 +48,53 @@ def get_spark(
         # nearly every row; scripts/ab_parallelism_first.py). At cluster
         # scale this is the setting that sizes partitions by bytes
         # (guide §2.2), not a local-core-count tune.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.parallelismFirst",
-            os.environ.get("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "false"),
-        )
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.driver.memory", mem)
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        "spark.sql.adaptive.coalescePartitions.parallelismFirst": os.environ.get(
+            "SPARK_GRAFT_AQE_PARALLELISM_FIRST", "false"
+        ),
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.session.timeZone": "UTC",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
+        "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
+        "spark.ui.enabled": "false",
+        "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
         # events.parquet carries TIMESTAMP(NANOS) which Spark rejects by
         # default; read as long nanos, converted in sources.tables.load
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    )
-    conf = dict(extra_conf or {})
-    if pretouch:
-        # merge with (not replace) any caller-supplied extraJavaOptions;
-        # caller flags come last so they win on a conflicting -Xms. On
-        # memory-constrained hosts where eagerly committing the full heap
-        # would fail or swap, opt out with SPARK_GRAFT_PRETOUCH=0.
+        "spark.sql.legacy.parquet.nanosAsLong": "true",
+    }
+    conf.update(extra_conf or {})
+    # Pre-fault the whole heap at JVM start (-Xms = -Xmx + AlwaysPreTouch):
+    # standard practice for dedicated Spark drivers/executors (fixed-size
+    # heap, no uncommit/recommit churn). On the r14 measurement host it was
+    # load-bearing: fresh anonymous pages faulted at ~0.1-0.35 GB/s (first-touch
+    # probes, OPTIMIZATION_r14.md), so a lazily-grown heap pays that cost
+    # INSIDE timed queries; pre-touching moves it to startup. Interleaved
+    # A/B on the bench IVF workload: add_time 10.65s -> 5.84s min-of-reps
+    # (scripts/ab_pretouch.py). On a normally-fast host the pretouch is
+    # <2s of startup. Opt out with SPARK_GRAFT_PRETOUCH=0.
+    if os.environ.get("SPARK_GRAFT_PRETOUCH", "1") != "0":
+        # -Xms is the RESOLVED driver memory (a caller's
+        # spark.driver.memory included), so it never exceeds the heap
+        # maximum; merged with (not replacing) any caller-supplied
+        # extraJavaOptions, which come last so they win on a conflicting
+        # -Xms. On memory-constrained hosts where eagerly committing the
+        # full heap would fail or swap, opt out with SPARK_GRAFT_PRETOUCH=0.
         user_opts = conf.get("spark.driver.extraJavaOptions", "")
         conf["spark.driver.extraJavaOptions"] = (
-            f"-Xms{mem} -XX:+AlwaysPreTouch " + user_opts
+            f"-Xms{conf['spark.driver.memory']} -XX:+AlwaysPreTouch " + user_opts
         ).strip()
-    for k, v in conf.items():
+    return conf
+
+
+def get_spark(
+    app_name: str = "cavde-spark",
+    cpus: int | str | None = None,
+    shuffle_partitions: int | None = None,
+    extra_conf: dict[str, str] | None = None,
+) -> SparkSession:
+    """Build (or reuse) a SparkSession with ``session_conf``'s options."""
+    builder = SparkSession.builder.appName(app_name)
+    for k, v in session_conf(cpus, shuffle_partitions, extra_conf).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

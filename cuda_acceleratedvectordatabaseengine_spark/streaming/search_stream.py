@@ -32,10 +32,12 @@ from __future__ import annotations
 
 import time
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
 from ..metrics import LatencyRecorder
+from ..operators import knn
 from ..operators.ivf import IVFIndex
 
 __all__ = ["LatencyRecorder", "serve_query_stream"]
@@ -85,19 +87,22 @@ def serve_query_stream(
     ``flow.THROUGHPUT_BATCH_SIZE`` for throughput mode; leave None for
     reference-parity adaptive sizing.
 
-    Exactly ONE driver action runs before the search per micro-batch: a
-    ``count`` in pass-through mode, a ``collect`` of the coalesced query
-    rows in staged mode (bounded — a micro-batch of query vectors is the
-    same driver payload ``index.search`` collects anyway).
+    Each micro-batch is collected exactly ONCE, and that collect is the
+    search's query matrix: ``knn.collect_query_matrix`` in pass-through
+    mode, a ``collect`` of the coalesced rows (with their priorities) in
+    staged mode, whose drained fusion groups are slices of the collected
+    rows. Every search then runs through ``index.search_matrix`` — no
+    pre-search ``count``, no second collect of the same rows, and no
+    ``createDataFrame`` per fusion group.
     """
     from .flow import CircuitOpenError, OverloadedError, Priority
 
     if batch_cap is not None and batch_cap < 1:
         raise ValueError(f"batch_cap must be >= 1, got {batch_cap}")
 
-    def run_search(batch_df: DataFrame, batch_id: int, n: int) -> None:
+    def run_search(qids: np.ndarray, Q: np.ndarray, batch_id: int) -> None:
         t0 = time.perf_counter()
-        results = index.search(batch_df, k=k, nprobe=nprobe)
+        results = index.search_matrix(qids, Q, k=k, nprobe=nprobe)
         if output_sink is not None:
             output_sink(results, batch_id)
         elif recorder is not None:
@@ -106,7 +111,7 @@ def serve_query_stream(
             recorder.record(
                 index.manifest.index_name,
                 batch_id,
-                n,
+                len(qids),
                 (time.perf_counter() - t0) * 1000.0,
             )
 
@@ -125,11 +130,11 @@ def serve_query_stream(
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         staged = priority_queue is not None
         if staged:
-            rows = batch_df.collect()  # the single pre-search driver action
+            rows = batch_df.collect()  # the micro-batch's one collect
             n = len(rows)
         else:
-            rows = None
-            n = batch_df.count()  # the single pre-search driver action
+            qids, Q = knn.collect_query_matrix(batch_df)  # its one collect
+            n = len(qids)
         if n == 0:
             return
         if rate_limiter is not None:
@@ -142,7 +147,6 @@ def serve_query_stream(
                 for r in rows:
                     pr = int(r[priority_col]) if has_p else Priority.NORMAL
                     priority_queue.enqueue(pr, r)
-                spark = batch_df.sparkSession
                 while len(priority_queue):
                     if batch_cap is not None:
                         size = batch_cap
@@ -151,13 +155,11 @@ def serve_query_stream(
                     else:
                         size = MAX_FUSION_GROUP
                     group = priority_queue.drain(size)
-                    gdf = spark.createDataFrame(
-                        [(r["query_id"], r["qvec"]) for r in group],
-                        "query_id long, qvec array<float>",
-                    )
-                    guarded(lambda g=gdf, m=len(group): run_search(g, batch_id, m))
+                    gq = np.array([r["query_id"] for r in group], dtype=np.int64)
+                    gQ = np.array([r["qvec"] for r in group], dtype=np.float64)
+                    guarded(lambda a=gq, b=gQ: run_search(a, b, batch_id))
             else:
-                guarded(lambda: run_search(batch_df, batch_id, n))
+                guarded(lambda: run_search(qids, Q, batch_id))
         finally:
             if controller is not None:
                 controller.decay()

@@ -26,14 +26,11 @@ def main() -> None:
     tag = sys.argv[1]
     names = sys.argv[2:]
     if tag == "before":
-        # render the r13 physical shapes via the kept A/B switches, so the
-        # before/after plan diff is reproducible from one tree
-        from cuda_acceleratedvectordatabaseengine_spark.operators import (
-            knn,
-            textops,
-        )
+        # render the r13 physical shapes via the kept A/B switch, so the
+        # before/after plan diff is reproducible from one tree (the r13
+        # two-window top-k merge arm no longer exists)
+        from cuda_acceleratedvectordatabaseengine_spark.operators import textops
 
-        knn.TOPK_SINGLE_EXCHANGE = False
         textops.DENSE_VECTOR_IMPL = "case"
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     out_dir = os.path.join(

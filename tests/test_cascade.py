@@ -70,13 +70,13 @@ def test_cascade_routing_and_gated_auto(sq_index, queries, monkeypatch):
     """cascade="sq" reads SQ codes (spy on the sidecar handle's search);
     "auto" follows CASCADE_AUTO_DEFAULT in both positions."""
     calls = []
-    orig = IVFSQIndex.search
+    orig = IVFSQIndex.search_matrix
 
     def spy(self, *a, **kw):
         calls.append(kw.get("rerank_k"))
         return orig(self, *a, **kw)
 
-    monkeypatch.setattr(IVFSQIndex, "search", spy)
+    monkeypatch.setattr(IVFSQIndex, "search_matrix", spy)
     sq_index._sq_cascade = None
     sq_index._sq_cascade_checked = False
     # default (auto + CASCADE_AUTO_DEFAULT False): flat, no sidecar call
@@ -96,13 +96,13 @@ def test_cascade_routing_and_gated_auto(sq_index, queries, monkeypatch):
 
 def test_cascade_widens_to_caller_rerank_k(sq_index, queries, monkeypatch):
     calls = []
-    orig = IVFSQIndex.search
+    orig = IVFSQIndex.search_matrix
 
     def spy(self, *a, **kw):
         calls.append(kw.get("rerank_k"))
         return orig(self, *a, **kw)
 
-    monkeypatch.setattr(IVFSQIndex, "search", spy)
+    monkeypatch.setattr(IVFSQIndex, "search_matrix", spy)
     sq_index.search(
         queries, k=10, nprobe=2, rerank_exact=True, rerank_k=200,
         cascade="sq",
@@ -188,13 +188,13 @@ def test_filtered_cascade_matches_filtered_flat(sq_index, queries):
 
 def test_search_batch_routes_through_cascade(sq_index, corpus, monkeypatch):
     calls = []
-    orig = IVFSQIndex.search
+    orig = IVFSQIndex.search_matrix
 
     def spy(self, *a, **kw):
         calls.append(1)
         return orig(self, *a, **kw)
 
-    monkeypatch.setattr(IVFSQIndex, "search", spy)
+    monkeypatch.setattr(IVFSQIndex, "search_matrix", spy)
     monkeypatch.setattr(ivf, "CASCADE_AUTO_DEFAULT", True)
     vecs = [r["vector"] for r in corpus.limit(4).collect()]
     reqs = [
@@ -234,13 +234,13 @@ def test_cold_storage_regime_self_acting(
     assert not idx._auto_cascade(4)  # 0.4 > patched 0.2 ceiling
     # routing: auto at low fraction goes through the sidecar...
     calls = []
-    orig = IVFSQIndex.search
+    orig = IVFSQIndex.search_matrix
 
     def spy(self, *a, **kw):
         calls.append(kw.get("nprobe"))
         return orig(self, *a, **kw)
 
-    monkeypatch.setattr(IVFSQIndex, "search", spy)
+    monkeypatch.setattr(IVFSQIndex, "search_matrix", spy)
     got_auto = _rows(idx.search(queries, k=10, nprobe=2))
     assert len(calls) == 1
     # ...and stays value-identical to the flat scan (exact rerank)
@@ -292,13 +292,13 @@ def test_cold_regime_contract_measured_through_serving_path(
     assert not warm._serving_may_cascade()
     monkeypatch.setattr(ivf, "COLD_CASCADE_MAX_FRACTION", 0.25)
     calls = []
-    orig = IVFSQIndex.search
+    orig = IVFSQIndex.search_matrix
 
     def spy(self, *a, **kw):
         calls.append(kw.get("nprobe"))
         return orig(self, *a, **kw)
 
-    monkeypatch.setattr(IVFSQIndex, "search", spy)
+    monkeypatch.setattr(IVFSQIndex, "search_matrix", spy)
     stamp = idx.tune_recall(
         corpus, target_recall=0.5, queries=queries, k=10,
         nprobes=(1, 2, 5, 10),
@@ -318,13 +318,13 @@ def test_operator_cold_build_with_contract_builds_sidecar_first(
     stamp is flat-measured and a later sidecar flips serving onto a
     shortlist scan the contract never covered."""
     calls = []
-    orig = IVFSQIndex.search
+    orig = IVFSQIndex.search_matrix
 
     def spy(self, *a, **kw):
         calls.append(kw.get("nprobe"))
         return orig(self, *a, **kw)
 
-    monkeypatch.setattr(IVFSQIndex, "search", spy)
+    monkeypatch.setattr(IVFSQIndex, "search_matrix", spy)
     monkeypatch.setattr(ivf, "COLD_CASCADE_MAX_FRACTION", 0.25)
     idx = ivf.IVFIndex.build(
         corpus, str(tmp_path), "cold_op", nlist=10, metric=D.L2,

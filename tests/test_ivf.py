@@ -80,6 +80,32 @@ def test_search_invariants(spark, index, emb_queries):
         assert len(ids) == len(set(ids))
 
 
+def _ranked(df):
+    return sorted(
+        (r["query_id"], r["rank"], r["id"], r["distance"]) for r in df.collect()
+    )
+
+
+def _executed(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+@pytest.mark.parametrize("rerank", [False, True])
+def test_search_size_rule_sides_agree(spark, index, emb_queries, monkeypatch, rerank):
+    """One search on each side of the size rule: within the candidate-row
+    budget the merge runs on the driver (a local relation, no exchange),
+    over it the lazy shuffle merge — same ids, ranks, distances and
+    tie-breaks."""
+    kw = dict(k=5, nprobe=3, rerank_exact=rerank, rerank_k=12 if rerank else None)
+    driver = index.search(emb_queries, **kw)
+    assert "LocalTableScan" in _executed(driver)
+    assert "Exchange" not in _executed(driver)
+    monkeypatch.setattr(knn, "DRIVER_MERGE_MAX_ROWS", 0)
+    shuffle = index.search(emb_queries, **kw)
+    assert "Exchange" in _executed(shuffle)
+    assert _ranked(driver) == _ranked(shuffle)
+
+
 def test_dimension_validation(spark, index):
     bad = spark.createDataFrame([(0, [1.0, 2.0])], "query_id long, qvec array<float>")
     with pytest.raises(ValueError, match="dimension"):
@@ -560,9 +586,13 @@ def test_filtered_search_matches_filtered_exact(spark, index, emb_corpus, emb_qu
     assert sorted((r["query_id"], r["rank"], r["id"]) for r in rr.collect()) == want
 
     # the predicate is pushed into the parquet scan, not applied post-hoc
+    # (the scan the search runs: its driver-merged result is a local
+    # relation)
+    with knn.capture_scans() as scans:
+        index.search(qdf, k=5, nprobe=10, where="id % 3 = 0")
     buf = io.StringIO()
     with redirect_stdout(buf):
-        index.search(qdf, k=5, nprobe=10, where="id % 3 = 0").explain("formatted")
+        scans[0].explain("formatted")
     plan = buf.getvalue()
     pushed = [seg.splitlines()[0] for seg in plan.split("PushedFilters")[1:]]
     assert pushed and any("id" in p for p in pushed)

@@ -326,29 +326,75 @@ def test_matryoshka_validation(spark, corpus, queries):
         knn.matryoshka_knn(df, qdf, k=5, prefix_dim=8, shortlist_k=3)
 
 
-def test_topk_merge_single_exchange_equals_two_window(spark):
-    """r14 one-exchange T4 merge: the min-distance aggregate dedup + shared
-    rank window must return EXACTLY the rows of the r13 two-window shape,
-    including multi-list duplicates with differing distances (keep the
-    min) and (distance, id) tie-breaks."""
+def _t4_reference(rows, k, dedup):
+    """Plain-Python T4 merge: dedup by (query, id) keeping the min
+    distance, order by (distance, id), take k, rank from 1."""
+    if dedup:
+        best = {}
+        for q, i, d in rows:
+            if (q, i) not in best or d < best[(q, i)]:
+                best[(q, i)] = d
+        rows = [(q, i, d) for (q, i), d in best.items()]
+    out = []
+    for q in sorted({r[0] for r in rows}):
+        ranked = sorted((d, i) for qq, i, d in rows if qq == q)[:k]
+        out += [(q, r + 1, i, d) for r, (d, i) in enumerate(ranked)]
+    return out
+
+
+@pytest.mark.parametrize("dedup", [True, False])
+def test_numpy_topk_merge_and_task_topk_match_reference(dedup):
+    """arrowkit.topk_merge, and TaskTopK folding many small batches with
+    in-task merges forced, equal the plain-Python merge — duplicate ids,
+    distance ties and short queries included."""
+    from cuda_acceleratedvectordatabaseengine_spark.functions import arrowkit as AK
+
+    rng = np.random.default_rng(7)
+    n, k = 600, 4
+    q = rng.integers(0, 9, n).astype(np.int64)
+    ids = rng.integers(0, 40, n).astype(np.int64)
+    d = rng.integers(0, 6, n).astype(np.float64)  # many ties
+    want = _t4_reference(list(zip(q.tolist(), ids.tolist(), d.tolist())), k, dedup)
+    got = AK.topk_merge(q, ids, d, k, dedup)
+    assert got[1].dtype == np.int32
+    assert list(zip(*(c.tolist() for c in got))) == want
+    acc = AK.TaskTopK(k, dedup)
+    acc.limit = 25  # force merges between batches
+    for a in range(0, n, 37):
+        acc.add(q[a:a + 37], ids[a:a + 37], d[a:a + 37])
+    (rb,) = list(acc.batches())
+    folded = AK.topk_merge(
+        rb.column(0).to_numpy(), rb.column(1).to_numpy(),
+        rb.column(2).to_numpy(), k, dedup,
+    )
+    assert list(zip(*(c.tolist() for c in folded))) == want
+    assert list(AK.TaskTopK(k).batches()) == []  # an empty task emits nothing
+
+
+def test_topk_driver_merge_equals_shuffle_merge(spark, monkeypatch):
+    """The driver-side numpy T4 merge must return EXACTLY the rows and
+    schema of the one-exchange shuffle merge, including multi-list
+    duplicates with differing distances (keep the min) and (distance, id)
+    tie-breaks; above the size rule's budget merge_topk IS the shuffle
+    merge."""
     rows = [
         # (query_id, id, distance) — id 7 appears twice for q1 (keep 0.5),
         # q2 has a distance tie broken by id
         (1, 7, 0.9), (1, 7, 0.5), (1, 3, 0.7), (1, 9, 0.7), (1, 2, 2.0),
         (2, 4, 1.0), (2, 1, 1.0), (2, 8, 0.1),
     ]
-    cand = spark.createDataFrame(
-        rows, "query_id long, id long, distance double"
-    )
-    prev = knn.TOPK_SINGLE_EXCHANGE
-    try:
-        knn.TOPK_SINGLE_EXCHANGE = True
-        a = {tuple(r) for r in knn.topk_per_query(cand, 3).collect()}
-        knn.TOPK_SINGLE_EXCHANGE = False
-        b = {tuple(r) for r in knn.topk_per_query(cand, 3).collect()}
-    finally:
-        knn.TOPK_SINGLE_EXCHANGE = prev
-    assert a == b
+    cand = spark.createDataFrame(rows, knn.CANDIDATE_SCHEMA)
+    shuffle = knn.topk_per_query(cand, 3)
+    driver = knn.merge_topk(cand, 3, nq=2)
+    assert "LocalTableScan" in driver._jdf.queryExecution().executedPlan().toString()
+    assert driver.schema == shuffle.schema
+    a = {tuple(r) for r in driver.collect()}
+    assert a == {tuple(r) for r in shuffle.collect()}
     assert (1, 1, 7, 0.5) in a  # dedup kept the min distance
     # q2 tie at 1.0 broke to the smaller id at rank 2
     assert (2, 2, 1, 1.0) in a and (2, 3, 4, 1.0) in a
+    # over budget: the lazy shuffle merge, same rows
+    monkeypatch.setattr(knn, "DRIVER_MERGE_MAX_ROWS", 0)
+    over = knn.merge_topk(cand, 3, nq=2)
+    assert "Exchange" in over._jdf.queryExecution().executedPlan().toString()
+    assert {tuple(r) for r in over.collect()} == a

@@ -13,6 +13,7 @@ from contextlib import redirect_stdout
 import pytest
 from pyspark.sql import functions as F
 
+from cuda_acceleratedvectordatabaseengine_spark.operators import knn
 from cuda_acceleratedvectordatabaseengine_spark.plans import queries as Q
 from cuda_acceleratedvectordatabaseengine_spark.sources import tables
 
@@ -68,7 +69,10 @@ def test_q12_no_python_in_plan(spark, sf_dir):
 def test_knn_scan_reads_only_needed_columns(spark, sf_dir):
     """The exact-kNN corpus scan must prune to (vec_id, embedding) — the
     label column stays unread."""
-    plan = plan_of(Q.get("q2_knn_l2").spark(spark, sf_dir))
+    # the scan the k-NN runs (its driver-merged result is a local relation)
+    with knn.capture_scans() as scans:
+        Q.get("q2_knn_l2").spark(spark, sf_dir)
+    plan = plan_of(scans[0])
     read_schemas = [
         seg.splitlines()[0] for seg in plan.split("ReadSchema")[1:]
     ]
@@ -121,7 +125,10 @@ def test_ivf_probe_prunes_partitions(spark, sf_dir, tmp_path):
     queries = emb.filter(F.col("vec_id") < 2).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
     )
-    plan = plan_of(idx.search(queries, k=5, nprobe=2))
+    # the scan the search runs (its driver-merged result is a local relation)
+    with knn.capture_scans() as scans:
+        idx.search(queries, k=5, nprobe=2)
+    plan = plan_of(scans[0])
     assert "PartitionFilters" in plan
     pf = plan.split("PartitionFilters")[1].splitlines()[0]
     assert "list_id" in pf
@@ -154,14 +161,19 @@ def test_rerank_joinback_scans_only_probed_lists(spark, sf_dir, tmp_path):
             head = leg.splitlines()[0]
             assert "list_id" in head, f"unpruned scan in rerank plan: {head}"
 
-    assert_all_scans_pruned(
-        idx.search(queries, k=3, nprobe=2, rerank_exact=True, rerank_k=5)
-    )
+    def assert_search_scans_pruned(handle):
+        # the scans the search runs — the list scan, then the rerank
+        # join-back (its driver-merged result is a local relation)
+        with knn.capture_scans() as scans:
+            handle.search(queries, k=3, nprobe=2, rerank_exact=True, rerank_k=5)
+        assert len(scans) == 2
+        for df in scans:
+            assert_all_scans_pruned(df)
+
+    assert_search_scans_pruned(idx)
     # the PQ rerank join-back must prune the raw-vector scan the same way
     pq_idx = pq.IVFPQIndex.build_from_ivf(idx, m=4)
-    assert_all_scans_pruned(
-        pq_idx.search(queries, k=3, nprobe=2, rerank_exact=True, rerank_k=5)
-    )
+    assert_search_scans_pruned(pq_idx)
 
 
 def test_chained_epoch_scan_prunes_both_legs(spark, sf_dir, tmp_path):
@@ -318,7 +330,9 @@ def test_bq_probe_prunes_partitions(spark, sf_dir, tmp_path):
     queries = emb.filter(F.col("vec_id") < 2).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
     )
-    plan = plan_of(bq_idx.search(queries, k=5, nprobe=2))
+    with knn.capture_scans() as scans:
+        bq_idx.search(queries, k=5, nprobe=2)
+    plan = plan_of(scans[0])
     assert "PartitionFilters" in plan
     pf = plan.split("PartitionFilters")[1].splitlines()[0]
     assert "list_id" in pf
